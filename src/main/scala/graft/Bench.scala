@@ -1,32 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every registered query against
-  * SPARK_GRAFT_SF_DIR, forcing full computation through the noop sink
-  * (count() would let Catalyst prune the work; noop executes the complete
-  * physical plan and discards rows executor-side — no driver collect).
+  * SPARK_GRAFT_SF_DIR through [[Sessions.runAndReset]] (the full physical
+  * plan into the noop sink, caches dropped after every run).
   * Prints ONE JSON line in the driver's expected shape. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions) // SQL fns + top-k strategy/rule
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = builder.getOrCreate()
-    // SPARK_GRAFT_CONF="k=v;k=v" extra confs (local experiment aid).
-    // Applied AFTER getOrCreate: builder configs are silently ignored
-    // when a session already exists in the JVM, while conf.set applies
-    // to any runtime-settable key (and throws on static ones — the
-    // honest behavior for a bench override that would otherwise not
-    // take effect). Values must not contain ';'.
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v) })
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.defaultCpus)
 
     // JVM/codegen warmup outside the timed region. Purely SYNTHETIC data
     // (spark.range + a throwaway temp-dir parquet round trip) — no
@@ -61,83 +42,51 @@ object Bench {
       rm(warmDir.toFile)
     }
 
-    // two timed runs per query: run 1 includes one-time whole-stage
-    // codegen compilation (a fixed per-plan Janino cost, ~seconds for the
-    // widest expression trees); run 2 is the steady-state per-batch cost —
-    // the number that scales with data volume.
+    // a cold run then steady runs per query: the cold run includes one-time
+    // whole-stage codegen compilation (a fixed per-plan Janino cost,
+    // ~seconds for the widest expression trees); steady is the per-batch
+    // cost — the number that scales with data volume.
     // SPARK_GRAFT_ONLY=q_a,q_b restricts the run (local iteration aid)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val selected = only.fold(SparkEntry.registry)(names =>
       SparkEntry.registry.filter(q => names.contains(q.name)))
+    // a failed query reports -1.0 — a visible sentinel in the JSON, not
+    // a plausible-looking near-zero timing. Caches are dropped BETWEEN
+    // the runs too: run 2 then measures pure codegen amortization
+    // (recompute cost), not a hit on what run 1 materialized.
+    def once(q: GraftQuery): Double =
+      try Sessions.runAndReset(spark)(q.run(spark, sfDir))
+      catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}")
+          -1.0
+      }
+    // steady = MIN of three post-warmup runs FOR EVERY query: single-
+    // shot steady readings on this host swing up to 3× from GC/CPU-
+    // frequency noise (measured: identical back-to-back runs at 5.1 s
+    // and 11.3 s, and a documented ±60% scatter on sub-3 s queries
+    // that forced three solo re-benches in round 10), and the minimum
+    // of repeated measurements is the standard estimator of the true
+    // recompute cost under one-sided noise. Min-of-2 left the short
+    // queries — exactly the ones whose SLOPE ratios the 10× audit
+    // divides — inside the noise floor, so the third run is paid for
+    // everyone, not just the tail. A failed run (-1) must stay -1,
+    // never win the min.
     val results = selected.map { q =>
-      // a failed query reports -1.0 — a visible sentinel in the JSON, not
-      // a plausible-looking near-zero timing
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        try {
-          q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}")
-            -1.0
-        }
-      }
-      // caches are dropped BETWEEN the runs too: run 2 then measures pure
-      // codegen amortization (recompute cost), not a hit on the sketch
-      // DataFrames run 1 materialized (cache lookup is by logical plan, so
-      // minhash/simhash/ivf would otherwise silently reuse them)
-      def clear(): Unit = {
-        operators.Caches.unpersistAll()
-        spark.catalog.clearCache()
-        // collect BETWEEN runs (untimed region): ~100 queries of dropped
-        // cache blocks and broadcast relations otherwise accumulate until
-        // a multi-second full GC lands INSIDE some later query's timed
-        // run (measured: q_tpch_q10 at 6.8 s in full-suite context vs
-        // 0.6 s standalone, all three readings — not noise, collections).
-        // An explicit GC also lets the ContextCleaner actually release
-        // weakly-referenced broadcast/shuffle state each cycle.
-        System.gc()
-      }
-      // steady = MIN of three post-warmup runs FOR EVERY query: single-
-      // shot steady readings on this host swing up to 3× from GC/CPU-
-      // frequency noise (measured: identical back-to-back runs at 5.1 s
-      // and 11.3 s, and a documented ±60% scatter on sub-3 s queries
-      // that forced three solo re-benches in round 10), and the minimum
-      // of repeated measurements is the standard estimator of the true
-      // recompute cost under one-sided noise. Min-of-2 left the short
-      // queries — exactly the ones whose SLOPE ratios the 10× audit
-      // divides — inside the noise floor, so the third run is paid for
-      // everyone, not just the tail. A failed run (-1) must stay -1,
-      // never win the min.
-      // SPARK_GRAFT_STEADY_RUNS (default 3) trims the steady repetitions
-      // for DECADE PROBES (sf10) where single queries run minutes: at
-      // that magnitude GC/CPU-frequency noise is sub-10%, and 3× repeats
-      // of a 200 s query buy nothing but wall-clock. The default — and
-      // every committed BENCH_* artifact — stays min-of-3 (+4th for the
-      // slow tail).
-      // fail fast on garbage, clamp to >= 1: zero/negative would leave
-      // `steadies` empty and throw from .min deep inside the run
-      val steadyRuns = sys.env.get("SPARK_GRAFT_STEADY_RUNS").map { v =>
-        val n = try v.toInt catch { case _: NumberFormatException =>
-          sys.error(s"SPARK_GRAFT_STEADY_RUNS must be a positive integer, got '$v'") }
-        math.max(1, n)
-      }.getOrElse(3)
-      val c = once(); clear()
-      val steadies = Seq.fill(steadyRuns) { val r = once(); clear(); r }
-      val st = if (steadies.exists(_ < 0)) -1.0 else steadies.min
-      (q.name, c, st, () => { val r = once(); clear(); r })
+      val c = once(q)
+      val steadies = Seq.fill(3)(once(q))
+      (q, c, if (steadies.exists(_ < 0)) -1.0 else steadies.min)
     }
     // the slowest queries get a FOURTH steady run folded into the min:
     // single-run noise on this host has twice produced ±3× false
     // regression flags precisely on the expensive tail, where one GC or
     // CPU-frequency excursion costs whole seconds
     val slow = results.filter(_._3 > 0).sortBy(-_._3).take(10).map(_._1).toSet
-    val refined = results.map { case (name, c, st, again) =>
-      if (slow.contains(name)) {
-        val st3 = again()
-        (name, c, if (st3 < 0) st else math.min(st, st3))
-      } else (name, c, st)
+    val refined = results.map { case (q, c, st) =>
+      if (slow.contains(q)) {
+        val st3 = once(q)
+        (q.name, c, if (st3 < 0) st else math.min(st, st3))
+      } else (q.name, c, st)
     }
     // locale-independent formatting: a comma-decimal default locale would
     // otherwise emit invalid JSON

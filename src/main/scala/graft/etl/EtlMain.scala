@@ -1,7 +1,7 @@
 package graft.etl
 
+import graft.Sessions
 import graft.schema.Schemas
-import org.apache.spark.sql.SparkSession
 
 /** CLI entry point mirroring the reference's `python etl.py --input …`
   * (etl.py:476-486): raw listing CSV in → clean parquet + CSV, issues,
@@ -13,13 +13,7 @@ object EtlMain {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: EtlMain <rawCsv> <outDir> [fallbackScrapedAtIso]")
     val Array(input, outDir) = args.take(2)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"))
-      .appName("graft-etl")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.defaultCpus)
 
     val mtime = args.lift(2).orElse {
       val f = new java.io.File(input)

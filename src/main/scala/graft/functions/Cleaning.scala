@@ -134,8 +134,9 @@ object Cleaning {
   /** decode_isq (scraper.py:263-280): URL-decode, split on `#`, split each
     * part on the FIRST `:` → trimmed map; partless/empty-key entries
     * dropped. Kept as a real MapType instead of the reference's lossy
-    * "; "-joined string. Caller must set
-    * spark.sql.mapKeyDedupPolicy=LAST_WIN to match Python dict semantics. */
+    * "; "-joined string. A repeated key keeps its last value, as the
+    * reference's dict does, under the mapKeyDedupPolicy=LAST_WIN that
+    * every [[graft.Sessions]] session sets. */
   def decodeIsq(c: Column): Column = {
     val m = str_to_map(url_decode(c), lit("#"), lit(":"))
     val trimmed = transform_values(transform_keys(m, (k, _) => trim(k)), (_, v) => trim(v))

@@ -146,7 +146,6 @@ object EventsStream {
         throw new IllegalStateException(
           s"streaming query $name did not finish within 300s — result would be partial")
       }
-      logBatches(name, q)
       val sink = spark.table(name)
       val rows = sink.collect()
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), sink.schema)
@@ -158,17 +157,6 @@ object EventsStream {
       deleteRecursively(new java.io.File(checkpoint))
     }
   }
-
-  /** SPARK_GRAFT_STREAM_DEBUG=1 dumps per-query micro-batch counts —
-    * the evidence behind SCALING.md's "fixed micro-batch overhead, not
-    * per-row cost" claim for the bench's stream family. */
-  private def logBatches(name: String,
-      q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
-    if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG")) {
-      val ps = q.recentProgress
-      System.err.println(s"[stream-batches] $name batches=${ps.length} " +
-        ps.map(p => s"${p.batchId}:${p.numInputRows}").mkString(","))
-    }
 
   private def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(deleteRecursively))
@@ -276,7 +264,6 @@ object EventsStream {
         throw new IllegalStateException(
           s"streaming upsert $name did not finish within 300s — state would be partial")
       }
-      logBatches(name, q)
       val last = gens().lastOption.getOrElse(throw new IllegalStateException(
         s"streaming upsert $name produced no state generation (empty source?)"))
       spark.read.parquet(s"$stateDir/gen-$last")

@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{Sessions, SparkEntry}
 
 /** Perf-loop helper: print the formatted physical plan and timed runs of
   * one or more registered queries (comma-separated), in ONE JVM/session —
@@ -12,23 +11,14 @@ import org.apache.spark.sql.SparkSession
   * SPARK_GRAFT_PLAN_DIR=<dir> (+ optional SPARK_GRAFT_PLAN_SUFFIX, e.g.
   * `_before`) persists each formatted plan to <dir>/<name><suffix>.txt —
   * the plans/rNN evidence files the optimization rounds commit. Timed
-  * reps use the noop sink and clear operator caches between runs,
-  * mirroring the Bench steady methodology (optimization guide 1.4).
+  * reps use Bench's run step, [[Sessions.runAndReset]].
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(2).map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.GraftExtensions) // SQL fns + top-k strategy, as Bench/Verify
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.defaultCpus)
 
     val planDir = sys.env.get("SPARK_GRAFT_PLAN_DIR")
     val planSuffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "")
@@ -47,15 +37,11 @@ object Explain {
         java.nio.file.Files.write(p,
           planText.getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit
       }
+      // fresh plan per rep + cache clear between runs: the timing is
+      // the recompute cost, exactly as Bench measures steady runs
       for (i <- 1 to reps) {
-        // fresh plan per rep + cache clear between runs: the timing is
-        // the recompute cost, exactly as Bench measures steady runs
-        val t0 = System.nanoTime()
-        q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
-        println(f"[explain] $name run $i: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-        graft.operators.Caches.unpersistAll()
-        spark.catalog.clearCache()
-        System.gc()
+        val secs = Sessions.runAndReset(spark)(q.run(spark, sfDir))
+        println(f"[explain] $name run $i: $secs%.3f s")
       }
       spark.sparkContext.setJobDescription(null)
     }

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.Sessions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -40,13 +41,7 @@ object ScaleUp {
     val Array(src, dst) = args.take(2)
     val factor = if (args.length > 2) args(2).toInt else 10
     require(factor >= 1, s"factor=$factor")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.defaultCpus)
     scaleAll(spark, src, dst, factor)
     spark.stop()
   }

@@ -1,11 +1,10 @@
 package graft
 
-import org.apache.spark.sql.functions.col
-
 /** Smoke guard over the whole driver contract: every registered query
-  * must run at sf0.001, produce a non-empty schema with unique names, and
-  * every oracle key must reference a registered query. Catches breakage
-  * in no-oracle queries that the DuckDB gate can't see. */
+  * must execute its full physical plan at sf0.001 through Bench's run
+  * step, produce a non-empty schema with unique names, and every oracle
+  * key must reference a registered query. Catches breakage in no-oracle
+  * queries that the DuckDB gate can't see. */
 class RegistrySpec extends SparkSpec {
 
   private val Dir = "/root/testdata/sf0.001"
@@ -23,11 +22,12 @@ class RegistrySpec extends SparkSpec {
 
   SparkEntry.registry.foreach { q =>
     test(s"query ${q.name} executes at sf0.001") {
-      val df = q.run(spark, Dir)
-      assert(df.columns.nonEmpty)
-      assert(df.columns.distinct.length === df.columns.length, "duplicate column names")
-      val n = df.count()
-      assert(n >= 0)
+      Sessions.runAndReset(spark) {
+        val df = q.run(spark, Dir)
+        assert(df.columns.nonEmpty)
+        assert(df.columns.distinct.length === df.columns.length, "duplicate column names")
+        df
+      }
     }
   }
 }

@@ -4,21 +4,13 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for specs; mirrors the driver harness confs. */
+/** Shared local SparkSession for specs: the engine session Bench and
+  * Verify run, at 4 cores. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .withExtensions(new GraftExtensions)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-    // fresh warehouse per JVM: the in-memory catalog forgets tables across
-    // sessions but their directories would otherwise persist and collide
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .getOrCreate()
+  // fresh warehouse per JVM: the in-memory catalog forgets tables across
+  // sessions but their directories would otherwise persist and collide
+  lazy val spark: SparkSession = Sessions.local(4, "spark.sql.warehouse.dir" ->
+    java.nio.file.Files.createTempDirectory("graft_wh").toString)
 
   /** All messages down a throwable's cause chain — the shared walker
     * for loud-throw specs (Spark wraps kernel exceptions in several

@@ -119,6 +119,10 @@ class CleaningSpec extends SparkSpec {
     val m2 = Seq(odd).toDF("c").select(decodeIsq(col("c")).as("m"))
       .collect()(0).getMap[String, String](0)
     assert(m2 == Map("K" -> "a:b", "Empty" -> ""))
+    // a repeated key keeps its last value, raw or only equal after trim
+    val dup = Seq("Brand:A#Type:X#Brand:B", "Brand:A#Brand :C").toDF("c")
+      .select(decodeIsq(col("c"))).collect().map(_.getMap[String, String](0))
+    assert(dup.toSeq == Seq(Map("Brand" -> "B", "Type" -> "X"), Map("Brand" -> "C")))
   }
 
   test("shortLabel (analysis.py:81-85)") {
