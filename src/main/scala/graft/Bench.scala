@@ -3,7 +3,8 @@ package graft
 /** Benchmark main: runs every registered query against
   * SPARK_GRAFT_SF_DIR through [[Sessions.runAndReset]] (the full physical
   * plan into the noop sink, caches dropped after every run).
-  * Prints ONE JSON line in the driver's expected shape. */
+  * Prints ONE JSON line (per-query cold and steady seconds, `failed`),
+  * and exits with status 1 when any query failed. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -58,7 +59,7 @@ object Bench {
       try Sessions.runAndReset(spark)(q.run(spark, sfDir))
       catch {
         case e: Throwable =>
-          System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}")
+          System.err.println(s"[bench] ${QueryFailure(q.name, e).line}")
           -1.0
       }
     // steady = MIN of three post-warmup runs FOR EVERY query: single-
@@ -110,5 +111,6 @@ object Bench {
     catch { case e: java.io.IOException =>
       System.err.println(s"[bench] could not write $outFile: ${e.getMessage}") }
     spark.stop()
+    if (nFailed > 0) sys.exit(1)
   }
 }

@@ -46,24 +46,17 @@ object EventsStream {
     val src =
       if (!hasGlob && new java.io.File(path).isFile) wrapAsGlob(path)
       else path
-    // one batch footer read sniffs which ts generation these files carry
-    // (nanos-long vs TIMESTAMP_NTZ — see Tables.events); the streaming
+    // the memoised footer schema says which ts generation these files
+    // carry (nanos-long vs TIMESTAMP_NTZ — see Tables.events); the streaming
     // declared schema and the normalizing projection both follow it.
-    // Sniff the ORIGINAL path — the batch reader takes files, dirs, and
-    // globs alike, and skipping the wrapped glob avoids a spurious logged
-    // listing miss on the literal `[t]` name.
-    val tsType = spark.read.parquet(path).schema("ts").dataType
-    val stream = spark.readStream
+    // Resolve the ORIGINAL path — a single file is memoised, and skipping
+    // the wrapped glob avoids a spurious logged listing miss on the literal
+    // `[t]` name.
+    val tsType = graft.Tables.schemaOf(spark, path)("ts").dataType
+    graft.Tables.normalizeTs(spark.readStream
       .schema(eventsRawSchema(tsType))
       .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(src)
-    tsType match {
-      case LongType         => stream.withColumn("ts", expr("timestamp_micros(ts DIV 1000)"))
-      case TimestampNTZType => stream.withColumn("ts", col("ts").cast(TimestampType))
-      case TimestampType    => stream
-      case other => throw new IllegalStateException(
-        s"events.ts arrived as unsupported type $other — expected nanos long, TIMESTAMP_NTZ, or TIMESTAMP")
-    }
+      .parquet(src))
   }
 
   /** Turn a literal file path into an equivalent one-match glob by

@@ -6,10 +6,14 @@ oracle_sql.json in DuckDB over the same sf parquet tables, and compares:
 columns sorted by name, rows sorted by all columns, exact value equality
 (with a tiny float tolerance report so near-misses are visible).
 
+A query that Verify recorded in OUT_DIR/failures.json fails here with its
+recorded cause: its parquet, if any, is left over from an earlier run.
+
 Usage: python3 tools/selfcheck.py [sfDir] [outDir]
 """
 import json
 import math
+import os
 import sys
 
 import duckdb
@@ -49,8 +53,18 @@ def main():
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
     oracle = json.load(open(f"{OUT_DIR}/oracle_sql.json"))
+    failures_path = f"{OUT_DIR}/failures.json"
+    failures = {}
+    if os.path.exists(failures_path):
+        failures = {f["query"]: f for f in json.load(open(failures_path))}
     n_pass = n_fail = 0
     for name, sql in sorted(oracle.items()):
+        if name in failures:
+            f = failures[name]
+            print(f"FAIL {name}: Verify failed with {f['exception']}: {f['message']}"
+                  f" (root cause: {f['root_cause']})")
+            n_fail += 1
+            continue
         try:
             mine = canon(pd.read_parquet(f"{OUT_DIR}/{name}"))
             ref = canon(con.execute(sql).fetchdf())
